@@ -16,8 +16,11 @@ object-dtype pandas frame so ``None`` stays a true NULL (a float64 column
 would coerce it to NaN) and ints never widen to floats; the explicit
 schema drives the Arrow types exactly as the classic path does.
 
-Any shape pandas/Arrow cannot round-trip falls back to the classic
-``createDataFrame`` — correctness is never traded for the fast path.
+A ZERO-column schema (what ``TableStore.read`` returns for a table that
+was never written) has no Arrow form; it is built as a one-partition
+``spark.range(n)`` with every column projected away — still no Python
+RDD. There is no other fallback: a row that does not fit its schema
+raises.
 """
 
 from __future__ import annotations
@@ -38,21 +41,18 @@ def local_df(
     Drop-in for ``spark.createDataFrame(rows, schema)`` on driver-local
     data with an explicit schema (DDL string or StructType)."""
     rows = list(rows)
-    try:
-        import pandas as pd
+    struct = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    names = struct.fieldNames()
+    if not names:
+        return spark.range(0, len(rows), 1, 1).select()
+    import pandas as pd
 
-        struct = (
-            StructType.fromDDL(schema) if isinstance(schema, str) else schema
-        )
-        names = struct.fieldNames()
-        if rows and isinstance(rows[0], dict):
-            data: dict[str, list[Any]] = {n: [] for n in names}
-            for r in rows:
-                for n in names:
-                    data[n].append(r.get(n))
-            pdf = pd.DataFrame(data, columns=names, dtype=object)
-        else:
-            pdf = pd.DataFrame(rows, columns=names, dtype=object)
-        return spark.createDataFrame(pdf, struct)
-    except Exception:  # noqa: BLE001 — any conversion gap: classic path
-        return spark.createDataFrame(rows, schema)
+    if rows and isinstance(rows[0], dict):
+        data: dict[str, list[Any]] = {n: [] for n in names}
+        for r in rows:
+            for n in names:
+                data[n].append(r.get(n))
+        pdf = pd.DataFrame(data, columns=names, dtype=object)
+    else:
+        pdf = pd.DataFrame(rows, columns=names, dtype=object)
+    return spark.createDataFrame(pdf, struct)

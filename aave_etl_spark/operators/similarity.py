@@ -10,8 +10,16 @@ compared only within matching hash buckets, turning the all-pairs problem
 into a bucket-local one. Hyperplanes are derived deterministically from md5
 so results are reproducible with no stored model.
 
-All arithmetic is JVM-side (`zip_with`/`aggregate` higher-order functions,
-accumulating in double, index order) — no Python/pandas round trip.
+Arithmetic: each vector kernel has ONE implementation. The per-row and
+per-pair kernels (dot, cosine, unit-normalize, SRP, random projection,
+IVF/PQ encode and ADC tables) are Arrow pandas UDFs that accumulate in
+float64, per dimension left to right, and round like Spark `round`, so
+rounded results are reproducible across engines. Geometry (centroids,
+codebooks) is a bounded driver collect, never corpus data; an empty
+geometry yields an empty result. What stays JVM-side is the set-shaped
+work (joins, windows, the k-means update) and a few HOF folds over short
+arrays (ADC score sums, the `ivfpq_train` nearest-cell step, k-means
+assignment, quantization), which run where no geometry is collected.
 """
 
 from __future__ import annotations
@@ -25,71 +33,69 @@ from pyspark.sql.window import Window
 from aave_etl_spark.localframe import local_df
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Σ a_i * b_i in double, left-to-right index order (deterministic).
-
-    The interpreted HOF form — REQUIRED inside lambda contexts (Catalyst
-    rejects Python UDFs under higher-order functions); top-level
-    projections should prefer :func:`dot_arrow`, the value-identical
-    Arrow-vectorized twin."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def dot_arrow(a: Column, b: Column) -> Column:
-    """Arrow-vectorized `dot` (guide §4.2): the interpreted form pays one
-    lambda-interpreter eval per element; `_pair_dot_udf` computes the same
-    per-dimension left-to-right float64 accumulation in numpy —
-    value-identical (same IEEE op order), including the NULL on a null
-    operand or a length mismatch (zip_with's null padding poisons the
-    sum). NOT usable inside HOF lambdas — use `dot` there.
+    """Σ a_i * b_i as an Arrow-vectorized pair kernel (guide §4.2):
+    `_pair_dot_udf` accumulates per dimension left to right in float64
+    (deterministic IEEE op order). NULL on a null operand or a length
+    mismatch. A pandas UDF, so NOT usable inside HOF lambdas (Catalyst
+    rejects Python UDFs there).
 
-    BOUNDARY CONTRACT (r13 ADVICE): embedding arrays must be
-    ELEMENT-null-free. A null ELEMENT inside an array crosses Arrow as
-    NaN, so this form yields NaN where the interpreted `dot` null-poisons
-    to NULL — and NaN sorts greatest under a desc similarity window.
+    BOUNDARY CONTRACT (r13 ADVICE): embedding arrays should be
+    ELEMENT-null-free. A null ELEMENT crosses Arrow as NaN; the NaN sum
+    then leaves the kernel as NULL, because Arrow's pandas conversion
+    treats NaN as missing (so does any other NaN result, e.g. inf·0).
     Every ingest path in this repo builds dense float arrays (parquet
     list<float>/list<double> with non-null items; the fixtures and every
-    store writer preserve that), so the forms agree on all reachable
-    inputs; a per-row element-None scan here would put a Python loop back
-    in the hot kernel to defend against a shape the pipeline never
-    produces. Enforce element-null-free arrays upstream if a new source
-    can violate it."""
+    store writer preserve that)."""
     return _pair_dot_udf()(a, b)
 
 
+def _pair_apply(a: pd.Series, b: pd.Series, kernel) -> pd.Series:
+    """Run a per-pair column kernel over an Arrow batch: rows whose
+    operands are both non-null and of equal length are stacked per length
+    into float64 matrices and handed to ``kernel(A, B)``; every other row
+    is NULL."""
+    n = len(a)
+    out = np.zeros(n, dtype=np.float64)
+    la = np.fromiter(
+        ((-1 if e is None else len(e)) for e in a), dtype=np.int64, count=n
+    )
+    lb = np.fromiter(
+        ((-1 if e is None else len(e)) for e in b), dtype=np.int64, count=n
+    )
+    ok = (la >= 0) & (la == lb)
+    for L in np.unique(la[ok]):
+        pos = np.nonzero(ok & (la == L))[0]
+        A = np.stack([np.asarray(a.iat[int(p)], np.float64) for p in pos])
+        B = np.stack([np.asarray(b.iat[int(p)], np.float64) for p in pos])
+        out[pos] = kernel(A, B)
+    res = pd.Series(out)
+    res[~pd.Series(ok)] = None
+    return res
+
+
+def _dot_cols(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise Σ A_i·B_i accumulated per-DIMENSION left to right (einsum —
+    see `_batch_dot_udf` — does NOT keep that order: it may reassociate
+    the sum)."""
+    acc = np.zeros(A.shape[0], dtype=np.float64)
+    for i in range(A.shape[1]):
+        acc = acc + A[:, i] * B[:, i]
+    return acc
+
+
+def _cos_cols(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return _dot_cols(A, B) / (np.sqrt(_dot_cols(A, A)) * np.sqrt(_dot_cols(B, B)))
+
+
 def _pair_dot_udf():
-    """Vectorized exact-order pair dot: per-DIMENSION column accumulation
-    replicates `aggregate`'s left-to-right order bitwise (einsum — see
-    `_batch_dot_udf` — does NOT: it may reassociate the sum)."""
+    """Vectorized exact-order pair dot (`_dot_cols`)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
     def pair_dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        n = len(a)
-        out = np.zeros(n, dtype=np.float64)
-        la = np.fromiter(
-            ((-1 if e is None else len(e)) for e in a), dtype=np.int64, count=n
-        )
-        lb = np.fromiter(
-            ((-1 if e is None else len(e)) for e in b), dtype=np.int64, count=n
-        )
-        ok = (la >= 0) & (la == lb)
-        for L in np.unique(la[ok]):
-            pos = np.nonzero(ok & (la == L))[0]
-            if L:
-                A = np.stack([np.asarray(a.iat[int(p)], np.float64) for p in pos])
-                B = np.stack([np.asarray(b.iat[int(p)], np.float64) for p in pos])
-                acc = np.zeros(len(pos), dtype=np.float64)
-                for i in range(L):
-                    acc = acc + A[:, i] * B[:, i]
-                out[pos] = acc
-        res = pd.Series(out)
-        res[~pd.Series(ok)] = None
-        return res
+        return _pair_apply(a, b, _dot_cols)
 
     return pair_dot
 
@@ -97,47 +103,27 @@ def _pair_dot_udf():
 def _pair_cos_udf():
     """Fused pair cosine in ONE Arrow stage: cos = Σa_ib_i /
     (sqrt(Σa_i²)·sqrt(Σb_i²)), every accumulation per-dimension
-    left-to-right float64 (the `dot`/`norm` op order) and the
-    sqrt/multiply/divide single IEEE ops — bitwise the JVM expression
-    `dot_arrow(a,b) / (norm(a) * norm(b))`. NULL on a null operand or a
-    length mismatch, like `dot_arrow`. One UDF stage instead of three
-    (two per-row norm evals + the pair dot): at small scale the Arrow
+    left-to-right float64 and the sqrt/multiply/divide single IEEE ops —
+    bitwise `dot_arrow(a,b) / (norm(a) * norm(b))` wherever both norms
+    are non-zero (where one is zero, that JVM divide raises
+    DIVIDE_BY_ZERO under ANSI mode). One UDF stage instead of three (two
+    per-row norm evals + the pair dot): at small scale the Arrow
     boundary's fixed cost per stage dominates (the r13 regression on
     llm_cosine_topk), and inside the kernel the pair-stack conversion
-    dominates the two extra accumulations."""
+    dominates the two extra accumulations.
+
+    NULL contract: the result is NULL on a null operand, a length
+    mismatch, a ZERO-NORM operand (0/0) or zero-length arrays. A
+    zero-norm vector has no direction, so it has no cosine; NULL sorts
+    last under the desc similarity windows (`cosine_topk`, `ivf_topk`,
+    `margin_topk`, the PQ prefilter), so such a candidate ranks after
+    every real one. The kernel computes NaN for 0/0 (zero-length arrays
+    included) and Arrow's pandas conversion turns NaN into NULL."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
     def pair_cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        n = len(a)
-        out = np.zeros(n, dtype=np.float64)
-        la = np.fromiter(
-            ((-1 if e is None else len(e)) for e in a), dtype=np.int64, count=n
-        )
-        lb = np.fromiter(
-            ((-1 if e is None else len(e)) for e in b), dtype=np.int64, count=n
-        )
-        ok = (la >= 0) & (la == lb)
-        for L in np.unique(la[ok]):
-            pos = np.nonzero(ok & (la == L))[0]
-            if L:
-                A = np.stack([np.asarray(a.iat[int(p)], np.float64) for p in pos])
-                B = np.stack([np.asarray(b.iat[int(p)], np.float64) for p in pos])
-                ab = np.zeros(len(pos), dtype=np.float64)
-                aa = np.zeros(len(pos), dtype=np.float64)
-                bb = np.zeros(len(pos), dtype=np.float64)
-                for i in range(L):
-                    ab = ab + A[:, i] * B[:, i]
-                    aa = aa + A[:, i] * A[:, i]
-                    bb = bb + B[:, i] * B[:, i]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    out[pos] = ab / (np.sqrt(aa) * np.sqrt(bb))
-            else:
-                # zero-length arrays: 0.0 / (0.0 * 0.0) = NaN, like the JVM
-                out[pos] = np.nan
-        res = pd.Series(out)
-        res[~pd.Series(ok)] = None
-        return res
+        return _pair_apply(a, b, _cos_cols)
 
     return pair_cos
 
@@ -146,10 +132,6 @@ def norm(a: Column) -> Column:
     # every call site is a top-level projection (audited), so the
     # vectorized dot applies; sqrt/divide stay JVM-side — identical floats
     return F.sqrt(dot_arrow(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot_arrow(a, b) / (norm(a) * norm(b))
 
 
 def cosine_topk(
@@ -177,7 +159,7 @@ def cosine_topk(
     )
     # ONE fused Arrow stage for the |c|×|q| pair projection (guide §4.2):
     # `_pair_cos_udf` computes dot and both norms per pair in numpy with
-    # the exact `dot`/`norm`/divide IEEE op order — bit-identical to the
+    # the exact `dot_arrow`/`norm`/divide IEEE op order — bit-identical to the
     # former dot_arrow + per-row-norm form, but 1 ArrowEvalPython stage
     # instead of 3 (the per-stage fixed cost caused r13's only
     # regression); the two extra accumulations ride the pair stack the
@@ -329,9 +311,8 @@ def _unit_rows_udf():
     form (`transform(v, x -> x / norm(v))`) pays a per-element interpreted
     lambda eval — ~1 s per 150k elements — while this computes the same
     floats in numpy. Bitwise-identical by construction: the norm
-    accumulates per-DIMENSION left-to-right over float64 columns, exactly
-    `dot()`'s aggregate order, and the per-element divide is one IEEE op
-    either way."""
+    accumulates per-DIMENSION left-to-right over float64 columns, and the
+    per-element divide is one IEEE op either way."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<double>")
@@ -656,8 +637,8 @@ def normalized(df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
     inside interpreted HOF lambdas for every pair).
 
     Arrow-vectorized (guide §4.2): `_unit_rows_udf` computes the identical
-    floats (per-dimension left-to-right norm accumulation = `dot()`'s
-    aggregate order; one IEEE divide per element) in numpy — the former
+    floats (per-dimension left-to-right float64 norm accumulation; one
+    IEEE divide per element) in numpy — the former
     interpreted HOF divide cost ~1 s per 150k elements of pure
     expression-interpreter overhead."""
     return df.select(
@@ -701,7 +682,8 @@ def _centroid_frame(
     """(cell_id, _ce): the coarse quantizer — deterministic first-n
     vectors by id, or a trained (cell_id, centroid) table from kmeans_fit.
     Consumed by `_collect_centroids` (bounded driver collect), which
-    derives the centroid norms once, in exact `dot()` order."""
+    derives the centroid norms once (per-dimension left-to-right
+    float64)."""
     if centroids is None:
         return candidates.filter(F.col(id_col) < n_cells).select(
             F.col(id_col).alias("cell_id"),
@@ -729,7 +711,7 @@ def _collect_centroids(cent: DataFrame):
     """Driver-collect the bounded centroid table (cell_id, _ce) — the same
     bounded-collect discipline as the probed-cell-id collects (≤ n_cells
     rows) — and precompute the float64 matrix plus exact-order norms
-    (per-dimension left-to-right, `dot()`'s accumulation)."""
+    (per-dimension left-to-right float64)."""
     rows = sorted(cent.select("cell_id", "_ce").collect(), key=lambda r: r.cell_id)
     ids = [int(r.cell_id) for r in rows]
     C = np.stack([np.asarray(r._ce, dtype=np.float64) for r in rows])
@@ -743,7 +725,7 @@ def _cell_rank_udf(ids, C, cen, round_digits: int, top: int):
     """Arrow-vectorized nearest-cells (guide §4.2): per row, the `top`
     cell ids ordered by (rounded cosine DESC, cell_id ASC) — exactly
     `array_max`/`sort_array` over `_cell_sims` structs. Dots accumulate
-    per-dimension left-to-right (bitwise `dot()` order), the row norm is
+    per-dimension left-to-right float64, the row norm is
     `norm()`'s order, the divide is `dot / (vn * cen)` in one IEEE op
     each, and rounding is `_round_half_up_py` = Spark `round`. NaN sims
     order LARGEST (Spark's double ordering)."""
@@ -1613,7 +1595,8 @@ def pq_topk(
     floats are never touched at query time.
 
     Output: (query_id, candidate_id, approx_d2, rank) — top ``k`` per
-    query by approximate squared L2 (asc, candidate-id ties).
+    query by approximate squared L2 (asc, candidate-id ties). An empty
+    codebook (empty corpus, or an empty ``codebook=``) gives no rows.
 
     ``codebook`` is (code, cvec) with DENSE 0-based codes (position in
     the sorted broadcast array IS the code); default is the first
@@ -1653,108 +1636,28 @@ def pq_topk(
     cbrow = cb.agg(F.sort_array(F.collect_list(F.struct("code", "cvec"))).alias("_cbs"))
 
     # Arrow-vectorized encode/ADC (guide §4.2) over the driver-collected
-    # codebook (bounded: n_codes rows) — value-identical to the interpreted
-    # HOF chain below, which stays as the EMPTY-codebook fallback
+    # codebook (bounded: n_codes rows)
     code_ids, CB = _geom_rows(cbrow)
-    if CB is not None:
-        enc_udf = _pq_direct_codes_udf(code_ids, CB, M, round_digits)
-        tab_udf = _pq_direct_tab_udf(code_ids, CB, M, round_digits)
-        guard = _pq_dim_guard
-        enc = (
-            candidates.select(
-                F.col(id_col).alias("candidate_id"),
-                F.col(vec_col).cast("array<double>").alias("_cv"),
-            )
-            .where(guard(F.col("_cv"), M, "pq_topk"))
-            .select("candidate_id", enc_udf(F.col("_cv")).alias("_codes"))
+    if CB is None:
+        # empty codebook: nothing to encode against, so no rows
+        return _typed_empty(
+            candidates.crossJoin(queries.select(F.col(id_col).alias("query_id"))),
+            "query_id",
+            F.col(id_col).alias("candidate_id"),
+            F.lit(None).cast("double").alias("approx_d2"),
+            F.lit(None).cast("long").alias("rank"),
         )
-        qtab = (
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).cast("array<double>").alias("_qv"),
-            )
-            .where(guard(F.col("_qv"), M, "pq_topk"))
-            .select("query_id", tab_udf(F.col("_qv")).alias("_tab"))
-        )
-        score = F.round(
-            F.aggregate(
-                F.sequence(F.lit(1), F.lit(M)),
-                F.lit(0.0),
-                lambda acc, m: acc
-                + F.element_at(
-                    F.element_at(F.col("_tab"), m),
-                    F.element_at(F.col("_codes"), m) + 1,
-                ),
-            ),
-            round_digits,
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("approx_d2").asc(), F.col("candidate_id")
-        )
-        return (
-            enc.crossJoin(F.broadcast(qtab))
-            .filter(F.col("candidate_id") != F.col("query_id"))
-            .select("query_id", "candidate_id", score.alias("approx_d2"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id", "candidate_id", "approx_d2",
-                F.col("rank").cast("long").alias("rank"),
-            )
-        )
-
-    def sub_d2(vec, cvec, m, s):
-        # squared L2 over subspace m (1-based positions m*s+1 .. (m+1)*s)
-        return F.aggregate(
-            F.sequence(m * s + 1, (m + F.lit(1)) * s),
-            F.lit(0.0),
-            lambda acc, j: acc
-            + (F.element_at(vec, j) - F.element_at(cvec, j))
-            * (F.element_at(vec, j) - F.element_at(cvec, j)),
-        )
-
-    # FAISS raises on d % M != 0 and so do we: a silent (d/M) truncation
-    # would quietly score over a prefix of the vector
-    def dim_guard(vec):
-        return F.when(F.size(vec) % M == 0, F.lit(True)).otherwise(
-            F.raise_error(
-                F.lit(f"pq_topk: vector dim not divisible by n_subspaces={M}")
-            )
-        )
-
-    # --- encode: per row, per subspace, the code with the smallest rounded
-    # sub-distance; struct min = (d2 asc, code asc) — engine-portable ties
+    enc_udf = _pq_direct_codes_udf(code_ids, CB, M, round_digits)
+    tab_udf = _pq_direct_tab_udf(code_ids, CB, M, round_digits)
     enc = (
         candidates.select(
             F.col(id_col).alias("candidate_id"),
             F.col(vec_col).cast("array<double>").alias("_cv"),
         )
-        .where(dim_guard(F.col("_cv")))
-        .crossJoin(F.broadcast(cbrow))
-        .select(
-            "candidate_id",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(M - 1)),
-                lambda m: F.array_min(
-                    F.transform(
-                        F.col("_cbs"),
-                        lambda s: F.struct(
-                            F.round(
-                                sub_d2(
-                                    F.col("_cv"), s["cvec"], m,
-                                    (F.size(F.col("_cv")) / M).cast("int"),
-                                ),
-                                round_digits,
-                            ).alias("d2"),
-                            s["code"].alias("code"),
-                        ),
-                    )
-                )["code"],
-            ).alias("_codes"),
-        )
+        .where(_pq_dim_guard(F.col("_cv"), M, "pq_topk"))
+        .select("candidate_id", enc_udf(F.col("_cv")).alias("_codes"))
     )
-
-    # --- ADC tables: per query, table[m+1][code+1] = rounded d2 of the
+    # ADC tables: per query, table[m+1][code+1] = rounded d2 of the
     # query's subvector m to sub-centroid `code` — M×K doubles per query,
     # computed once on the tiny side, broadcast into the code scan
     qtab = (
@@ -1762,37 +1665,8 @@ def pq_topk(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).cast("array<double>").alias("_qv"),
         )
-        .where(dim_guard(F.col("_qv")))
-        .crossJoin(F.broadcast(cbrow))
-        .select(
-            "query_id",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(M - 1)),
-                lambda m: F.transform(
-                    F.col("_cbs"),
-                    lambda s: F.round(
-                        sub_d2(
-                            F.col("_qv"), s["cvec"], m,
-                            (F.size(F.col("_qv")) / M).cast("int"),
-                        ),
-                        round_digits,
-                    ),
-                ),
-            ).alias("_tab"),
-        )
-    )
-
-    score = F.round(
-        F.aggregate(
-            F.sequence(F.lit(1), F.lit(M)),
-            F.lit(0.0),
-            lambda acc, m: acc
-            + F.element_at(
-                F.element_at(F.col("_tab"), m),
-                F.element_at(F.col("_codes"), m) + 1,
-            ),
-        ),
-        round_digits,
+        .where(_pq_dim_guard(F.col("_qv"), M, "pq_topk"))
+        .select("query_id", tab_udf(F.col("_qv")).alias("_tab"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("approx_d2").asc(), F.col("candidate_id")
@@ -1800,7 +1674,7 @@ def pq_topk(
     return (
         enc.crossJoin(F.broadcast(qtab))
         .filter(F.col("candidate_id") != F.col("query_id"))
-        .select("query_id", "candidate_id", score.alias("approx_d2"))
+        .select("query_id", "candidate_id", _adc_score(M, round_digits).alias("approx_d2"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
@@ -1860,50 +1734,6 @@ def _cell_residual(vec: Column, cell: Column) -> Column:
     )
 
 
-def _pq_sub_d2(vec: Column, cvec: Column, m: Column, s: Column) -> Column:
-    """Squared L2 over subspace m (1-based positions m*s+1 .. (m+1)*s)."""
-    return F.aggregate(
-        F.sequence(m * s + 1, (m + F.lit(1)) * s),
-        F.lit(0.0),
-        lambda acc, j: acc
-        + (F.element_at(vec, j) - F.element_at(cvec, j))
-        * (F.element_at(vec, j) - F.element_at(cvec, j)),
-    )
-
-
-def _pq_codes(res_vec: Column, m_sub: int, round_digits: int) -> Column:
-    """Per-subspace nearest code (rounded d2, tie -> lowest code) against
-    the broadcast ``_cbs`` codebook column."""
-    s = (F.size(res_vec) / m_sub).cast("int")
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(m_sub - 1)),
-        lambda m: F.array_min(
-            F.transform(
-                F.col("_cbs"),
-                lambda cbs: F.struct(
-                    F.round(_pq_sub_d2(res_vec, cbs["cvec"], m, s), round_digits).alias("d2"),
-                    cbs["code"].alias("code"),
-                ),
-            )
-        )["code"],
-    )
-
-
-def _adc_table(qres: Column, m_sub: int, round_digits: int) -> Column:
-    """table[m+1][code+1] = rounded d2 of the query residual's subvector m
-    to sub-centroid ``code`` (``_cbs`` in scope) — MxK doubles per row."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(m_sub - 1)),
-        lambda m: F.transform(
-            F.col("_cbs"),
-            lambda cbs: F.round(
-                _pq_sub_d2(qres, cbs["cvec"], m, (F.size(qres) / m_sub).cast("int")),
-                round_digits,
-            ),
-        ),
-    )
-
-
 def _adc_score(m_sub: int, round_digits: int) -> Column:
     """Σ_m table[m][codes[m]] over the pair's ``_tab``/``_codes`` columns."""
     return F.round(
@@ -1941,8 +1771,8 @@ def _geom_rows(row_df: DataFrame):
     (int64 ids ASC, float64 matrix) — the `_collect_centroids` bounded-
     collect discipline extended to the L2/PQ kernels (geometry-sized:
     ≤ n_cells/n_codes rows, never corpus data). Returns (None, None) for
-    an EMPTY geometry — callers keep the interpreted HOF path for that
-    degenerate shape (its null-propagating struct-min semantics)."""
+    an EMPTY geometry; the kernels answer that shape with no rows
+    (`_typed_empty`)."""
     structs = row_df.collect()[0][0]
     return _parse_geom_structs(structs)
 
@@ -1957,16 +1787,20 @@ def _parse_geom_structs(structs):
 
 def _geom_pair(cells_row: DataFrame, cb_row: DataFrame):
     """Driver-collect BOTH one-row geometry frames in ONE Spark job (the
-    1×1 crossJoin of two single-row aggregates). The encode and probe
-    stages used to run `_geom_rows` independently — four driver jobs per
-    ivfpq_topk call, each re-running the seed scan feeding the geometry
-    (r13 ADVICE) — where one suffices: collect once here and pass the
-    parsed pair into `_ivfpq_encode` / `_ivfpq_probe_tables` via their
-    ``geom=`` parameter. Still bounded: ≤ n_cells + n_codes rows, never
-    corpus data. An empty side parses to (None, None) so callers keep the
-    interpreted fallback for that degenerate shape."""
+    1×1 crossJoin of two single-row aggregates), so the seed scan feeding
+    the geometry runs once per call (r13 ADVICE); the parsed pair feeds
+    `_ivfpq_encode` / `_ivfpq_probe_tables`. Still bounded: ≤ n_cells +
+    n_codes rows, never corpus data. An empty side parses to (None, None),
+    like `_geom_rows`."""
     row = cells_row.crossJoin(cb_row).collect()[0]
     return _parse_geom_structs(row[0]), _parse_geom_structs(row[1])
+
+
+def _typed_empty(df: DataFrame, *cols) -> DataFrame:
+    """The kernels' answer to an empty geometry: zero rows with the usual
+    output columns. The false filter folds the plan to an empty
+    LocalRelation, so the frame costs no Spark job."""
+    return df.where(F.lit(False)).select(*cols)
 
 
 def _l2_accum(X: np.ndarray, C: np.ndarray) -> np.ndarray:
@@ -1993,9 +1827,9 @@ def _l2_order(d2_rounded: list, ids: np.ndarray) -> list:
 
 
 def _sub_d2_tables(R: np.ndarray, CB: np.ndarray, m_sub: int) -> list:
-    """Per-subspace rows × codes squared L2 — `_pq_sub_d2`'s left-to-right
-    accumulation over the subspace's dimensions (full-d codebook rows are
-    sliced at positions m*s..(m+1)*s-1, exactly the interpreted form)."""
+    """Per-subspace rows × codes squared L2, accumulated left-to-right
+    over the subspace's dimensions (full-d codebook rows are sliced at
+    positions m*s..(m+1)*s-1)."""
     s = R.shape[1] // m_sub
     tabs = []
     for m in range(m_sub):
@@ -2015,8 +1849,7 @@ def _l2_cell_rank_udf(ids, C, round_digits: int, top: int):
     Accumulation is `_l2sq`'s per-dimension left-to-right order, rounding
     is `_round_half_up_py` (= Spark `round`), ties and NaN order exactly
     like the struct comparison — ids are value-identical. A vector whose
-    dim differs from the geometry's raises loudly (the interpreted form's
-    null-padded d2 cannot occur under the build/append dim discipline)."""
+    dim differs from the geometry's raises loudly."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<int>")
@@ -2042,10 +1875,10 @@ def _l2_cell_rank_udf(ids, C, round_digits: int, top: int):
 def _pq_encode_udf(cell_ids, C, code_ids, CB, m_sub: int, round_digits: int):
     """Arrow-vectorized IVF-PQ encode (guide §4.2): nearest cell (rounded
     L2, id ties), residual vs that cell's centroid, per-subspace nearest
-    code — `_ivfpq_encode`'s interpreted chain in numpy, value-identical
-    (same accumulation order, `_round_half_up_py` rounding, same tie/NaN
-    ordering; the residual uses the argmin's own centroid row, which under
-    the dense 0-based id contract IS `element_at(_cells, cell+1)`)."""
+    code — per-dimension left-to-right float64 accumulation,
+    `_round_half_up_py` rounding, struct-min tie/NaN ordering (lowest id
+    wins); the residual uses the argmin's own centroid row, which under
+    the dense 0-based id contract IS `element_at(_cells, cell+1)`."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("cell_id int, codes array<int>")
@@ -2082,8 +1915,9 @@ def _pq_encode_udf(cell_ids, C, code_ids, CB, m_sub: int, round_digits: int):
 
 def _adc_res_tab_udf(cell_ids, C, code_ids, CB, m_sub: int, round_digits: int):
     """Arrow-vectorized per-(query, cell) residual ADC table (guide §4.2):
-    (vec, cell_id) → rounded M×K d2 table — `_cell_residual` + `_adc_table`
-    in numpy, value-identical (same accumulation order and rounding)."""
+    (vec, cell_id) → rounded M×K d2 table: the residual vs the cell's
+    centroid (`_cell_residual`), then `_sub_d2_tables` rounded like Spark
+    `round`."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<array<double>>")
@@ -2263,134 +2097,77 @@ def _ivfpq_residual_codebook(
 
 def _ivfpq_encode(
     candidates: DataFrame,
-    cells_row: DataFrame,
-    cb_row: DataFrame,
+    geom,
     m_sub: int,
     id_col: str,
     vec_col: str,
     round_digits: int,
-    geom=None,
 ) -> DataFrame:
     """One map-only corpus pass: (candidate_id, cell_id, _codes).
 
-    Arrow-vectorized (guide §4.2): the geometry is a bounded driver
-    collect (`_geom_rows`, or the caller's shared `_geom_pair` result via
-    ``geom=``) and the nearest-cell + residual + codes chain runs in
-    numpy (`_pq_encode_udf`) — value-identical to the interpreted HOF
-    form, which is kept below as the EMPTY-geometry fallback (its
-    null-propagating struct-min semantics for the degenerate shape)."""
-    if geom is None:
-        geom = (_geom_rows(cells_row), _geom_rows(cb_row))
+    Arrow-vectorized (guide §4.2): ``geom`` is the caller's bounded
+    `_geom_pair` collect and the nearest-cell + residual + codes chain
+    runs in numpy (`_pq_encode_udf`). An empty side (no cells or no
+    codebook) encodes nothing: no rows."""
     (cell_ids, C), (code_ids, CB) = geom
-    if C is not None and CB is not None:
-        enc = _pq_encode_udf(cell_ids, C, code_ids, CB, m_sub, round_digits)
-        return (
-            candidates.select(
-                F.col(id_col).alias("candidate_id"),
-                F.col(vec_col).cast("array<double>").alias("_cv"),
-            )
-            .where(_pq_dim_guard(F.col("_cv"), m_sub, "ivfpq"))
-            .select("candidate_id", enc(F.col("_cv")).alias("_e"))
-            .select(
-                "candidate_id",
-                F.col("_e.cell_id").alias("cell_id"),
-                F.col("_e.codes").alias("_codes"),
-            )
+    if C is None or CB is None:
+        return _typed_empty(
+            candidates,
+            F.col(id_col).alias("candidate_id"),
+            F.lit(None).cast("int").alias("cell_id"),
+            F.lit(None).cast("array<int>").alias("_codes"),
         )
+    enc = _pq_encode_udf(cell_ids, C, code_ids, CB, m_sub, round_digits)
     return (
         candidates.select(
             F.col(id_col).alias("candidate_id"),
             F.col(vec_col).cast("array<double>").alias("_cv"),
         )
         .where(_pq_dim_guard(F.col("_cv"), m_sub, "ivfpq"))
-        .crossJoin(F.broadcast(cells_row))
+        .select("candidate_id", enc(F.col("_cv")).alias("_e"))
         .select(
-            "candidate_id", "_cv",
-            _nearest_cell(F.col("_cv"), round_digits).alias("cell_id"),
-            "_cells",
-        )
-        .select(
-            "candidate_id", "cell_id",
-            _cell_residual(F.col("_cv"), F.col("cell_id")).alias("_res"),
-        )
-        .crossJoin(F.broadcast(cb_row))
-        .select(
-            "candidate_id", "cell_id",
-            _pq_codes(F.col("_res"), m_sub, round_digits).alias("_codes"),
+            "candidate_id",
+            F.col("_e.cell_id").alias("cell_id"),
+            F.col("_e.codes").alias("_codes"),
         )
     )
 
 
 def _ivfpq_probe_tables(
     queries: DataFrame,
-    cells_row: DataFrame,
-    cb_row: DataFrame,
+    geom,
     n_probe: int,
     m_sub: int,
     id_col: str,
     vec_col: str,
     round_digits: int,
-    geom=None,
 ) -> DataFrame:
     """(query_id, cell_id, _tab): the n_probe nearest cells per query and
     the per-(query, cell) residual ADC table.
 
     Arrow-vectorized (guide §4.2): probe-cell ranking and the residual
-    ADC tables run in numpy over the driver-collected geometry
-    (`_l2_cell_rank_udf` + `_adc_res_tab_udf`, or the caller's shared
-    `_geom_pair` result via ``geom=``), value-identical to the
-    interpreted HOF form kept below as the EMPTY-geometry fallback."""
-    if geom is None:
-        geom = (_geom_rows(cells_row), _geom_rows(cb_row))
+    ADC tables run in numpy over the caller's `_geom_pair` collect
+    (`_l2_cell_rank_udf` + `_adc_res_tab_udf`). An empty side probes
+    nothing: no rows."""
     (cell_ids, C), (code_ids, CB) = geom
-    if C is not None and CB is not None:
-        rankp = _l2_cell_rank_udf(cell_ids, C, round_digits, n_probe)
-        tab = _adc_res_tab_udf(cell_ids, C, code_ids, CB, m_sub, round_digits)
-        return (
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).cast("array<double>").alias("_qv"),
-            )
-            .where(_pq_dim_guard(F.col("_qv"), m_sub, "ivfpq"))
-            .select("query_id", "_qv", F.explode(rankp(F.col("_qv"))).alias("cell_id"))
-            .select(
-                "query_id", "cell_id", tab(F.col("_qv"), F.col("cell_id")).alias("_tab")
-            )
+    if C is None or CB is None:
+        return _typed_empty(
+            queries,
+            F.col(id_col).alias("query_id"),
+            F.lit(None).cast("int").alias("cell_id"),
+            F.lit(None).cast("array<array<double>>").alias("_tab"),
         )
+    rankp = _l2_cell_rank_udf(cell_ids, C, round_digits, n_probe)
+    tab = _adc_res_tab_udf(cell_ids, C, code_ids, CB, m_sub, round_digits)
     return (
         queries.select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).cast("array<double>").alias("_qv"),
         )
         .where(_pq_dim_guard(F.col("_qv"), m_sub, "ivfpq"))
-        .crossJoin(F.broadcast(cells_row))
+        .select("query_id", "_qv", F.explode(rankp(F.col("_qv"))).alias("cell_id"))
         .select(
-            "query_id", "_qv",
-            F.slice(
-                F.array_sort(
-                    F.transform(
-                        F.col("_cells"),
-                        lambda c: F.struct(
-                            F.round(_l2sq(F.col("_qv"), c["cvec"]), round_digits).alias("d2"),
-                            c["cell_id"].alias("cell_id"),
-                        ),
-                    )
-                ),
-                1,
-                n_probe,
-            ).alias("_probes"),
-            F.col("_cells"),
-        )
-        .select("query_id", "_qv", F.explode("_probes").alias("_p"), "_cells")
-        .select("query_id", "_qv", F.col("_p")["cell_id"].alias("cell_id"), "_cells")
-        .select(
-            "query_id", "cell_id",
-            _cell_residual(F.col("_qv"), F.col("cell_id")).alias("_qres"),
-        )
-        .crossJoin(F.broadcast(cb_row))
-        .select(
-            "query_id", "cell_id",
-            _adc_table(F.col("_qres"), m_sub, round_digits).alias("_tab"),
+            "query_id", "cell_id", tab(F.col("_qv"), F.col("cell_id")).alias("_tab")
         )
     )
 
@@ -2491,7 +2268,8 @@ def ivfpq_topk(
 
     Output: (query_id, candidate_id, cell_id, approx_d2, rank) — top
     ``k`` per query among candidates in its probed cells, by approximate
-    squared L2 (asc, candidate-id ties).
+    squared L2 (asc, candidate-id ties). No cells or no codebook (e.g.
+    fewer than ``n_cells + 1`` candidates) gives no rows.
 
     Deterministic geometry (the certifiable twin of a trained index):
     cell centroids = the first ``n_cells`` candidates by id (densely
@@ -2520,11 +2298,9 @@ def ivfpq_topk(
     # ONE bounded geometry collect shared by encode and probe (was four
     # `_geom_rows` jobs, each re-running the seed scan — r13 ADVICE)
     geom = _geom_pair(cells_row, cb_row)
-    enc = _ivfpq_encode(
-        candidates, cells_row, cb_row, M, id_col, vec_col, round_digits, geom=geom
-    )
+    enc = _ivfpq_encode(candidates, geom, M, id_col, vec_col, round_digits)
     probed = _ivfpq_probe_tables(
-        queries, cells_row, cb_row, n_probe, M, id_col, vec_col, round_digits, geom=geom
+        queries, geom, n_probe, M, id_col, vec_col, round_digits
     )
     return _ivfpq_rank(enc.join(F.broadcast(probed), "cell_id"), k, M, round_digits)
 
@@ -2581,8 +2357,7 @@ def ivfpq_index_build(
     cells_row = _struct_row(cells, "cell_id", "_cells")
     cb_row = _struct_row(cb, "code", "_cbs")
     enc = _ivfpq_encode(
-        candidates, cells_row, cb_row, M, id_col, vec_col, round_digits,
-        geom=_geom_pair(cells_row, cb_row),
+        candidates, _geom_pair(cells_row, cb_row), M, id_col, vec_col, round_digits
     )
     if carry_cols:
         enc = enc.join(
@@ -2668,8 +2443,8 @@ def ivfpq_index_append(
         cbdf.select("code", F.col("centroid").alias("cvec")), "code", "_cbs"
     )
     enc = _ivfpq_encode(
-        new_vecs, cells_row, cb_row, n_subspaces, id_col, vec_col, round_digits,
-        geom=_geom_pair(cells_row, cb_row),
+        new_vecs, _geom_pair(cells_row, cb_row), n_subspaces, id_col, vec_col,
+        round_digits,
     )
     if carry_cols:
         enc = enc.join(
@@ -2751,8 +2526,8 @@ def ivfpq_index_search(
         cbdf.select("code", F.col("centroid").alias("cvec")), "code", "_cbs"
     )
     probed = _ivfpq_probe_tables(
-        queries, cells_row, cb_row, n_probe, M, id_col, vec_col, round_digits,
-        geom=_geom_pair(cells_row, cb_row),
+        queries, _geom_pair(cells_row, cb_row), n_probe, M, id_col, vec_col,
+        round_digits,
     # consumed twice (driver collect of probe cells + the scan join):
     # cut the lineage so query scoring against the centroids runs once
     ).localCheckpoint(eager=False)

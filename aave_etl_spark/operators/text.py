@@ -546,6 +546,42 @@ def bm25_index_build(
     _BM25_PARAMS_SEEN.pop(store._path(name + "_params"), None)
 
 
+def bm25_index_postings(store, name: str, k1: float = 1.2, b: float = 0.75) -> DataFrame:
+    """The at-rest postings of index ``name`` (`bm25_index_build`), after
+    checking that they were scored under (k1, b): raises on a missing or
+    mismatched build-params sidecar. :func:`bm25_index_search` probes
+    them; :func:`bm25_topk_from_postings` ranks them per document."""
+    import os
+
+    # only a MISSING sidecar means "never built" — a present-but-unreadable
+    # one (half-written build, corruption) must surface as its own error,
+    # not send the caller to rebuild over a live index; an explicit path
+    # check makes the distinction exception classes can't
+    path = store._path(name + "_params")
+    if not os.path.exists(path):
+        raise ValueError(
+            f"no params sidecar for BM25 index {name!r} —"
+            " build it with bm25_index_build first"
+        )
+    # the sidecar is immutable once built (completion-marker discipline;
+    # bm25_index_build invalidates this entry on rewrite), so validate it
+    # with ONE driver job per index per session instead of one per search
+    # call — a per-process memo of a 2-float guard row, not of any query
+    # result (five at-rest consumers each paid a head() job otherwise)
+    built_pair = _BM25_PARAMS_SEEN.get(path)
+    if built_pair is None:
+        built = store.spark.read.parquet(path).head()
+        built_pair = (built.k1, built.b)
+        _BM25_PARAMS_SEEN[path] = built_pair
+    if (float(k1), float(b)) != built_pair:
+        raise ValueError(
+            f"bm25 index params {(k1, b)} != build params"
+            f" {built_pair} (k1, b) — stored weights were scored"
+            " under the build's parameters"
+        )
+    return store.read_bucketed(name)
+
+
 def bm25_index_search(
     store,
     queries: DataFrame,
@@ -569,36 +605,7 @@ def bm25_index_search(
 
     Raises on a (k1, b) mismatch against the index's build-params sidecar
     — drifted parameters would silently score with stale norms."""
-    import os
-
-    spark = queries.sparkSession
-    # only a MISSING sidecar means "never built" — a present-but-unreadable
-    # one (half-written build, corruption) must surface as its own error,
-    # not send the caller to rebuild over a live index; an explicit path
-    # check makes the distinction exception classes can't
-    path = store._path(name + "_params")
-    if not os.path.exists(path):
-        raise ValueError(
-            f"bm25_index_search: no params sidecar for index {name!r} —"
-            " build it with bm25_index_build first"
-        )
-    # the sidecar is immutable once built (completion-marker discipline;
-    # bm25_index_build invalidates this entry on rewrite), so validate it
-    # with ONE driver job per index per session instead of one per search
-    # call — a per-process memo of a 2-float guard row, not of any query
-    # result (five at-rest consumers each paid a head() job otherwise)
-    built_pair = _BM25_PARAMS_SEEN.get(path)
-    if built_pair is None:
-        built = spark.read.parquet(path).head()
-        built_pair = (built.k1, built.b)
-        _BM25_PARAMS_SEEN[path] = built_pair
-    if (float(k1), float(b)) != built_pair:
-        raise ValueError(
-            f"bm25 index params {(k1, b)} != build params"
-            f" {built_pair} (k1, b) — stored weights were scored"
-            " under the build's parameters"
-        )
-    postings = store.read_bucketed(name)
+    postings = bm25_index_postings(store, name, k1, b)
     if max_df is not None and "df" not in postings.columns:
         # indexes built before the df column existed can't serve a capped
         # probe — fail with the rebuild hint, not an unresolved-column error

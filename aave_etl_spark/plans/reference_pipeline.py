@@ -45,7 +45,7 @@ from aave_etl_spark.warehouse.blocks import blocks_by_day as wh_blocks_by_day
 from aave_etl_spark.warehouse.incentives import incentives_by_day as wh_incentives_by_day
 from aave_etl_spark.warehouse.liquidity import liquidity_depth as wh_liquidity_depth
 from aave_etl_spark.warehouse.market import market_config_by_day, market_state_by_day
-from aave_etl_spark.warehouse.prices import token_prices_by_day
+from aave_etl_spark.warehouse.prices import TOKEN_PRICES_BY_DAY, token_prices_by_day
 from aave_etl_spark.localframe import local_df
 
 
@@ -725,9 +725,13 @@ def _wh_market_config(ctx: AssetContext) -> DataFrame:
 def _wh_balancer_bpt(ctx: AssetContext) -> DataFrame:
     from aave_etl_spark.warehouse.bpt import balancer_bpt_by_day as wh_bpt
 
+    # typed reads: a warehouse run whose chain_day job never wrote the BPT
+    # scan yields an empty table instead of failing to resolve the join
     return wh_bpt(
-        ctx.upstream("balancer_bpt_data_by_day"),
-        ctx.upstream("token_prices_by_day"),
+        ctx.upstream(
+            "balancer_bpt_data_by_day", schema=connectors.schemas.BALANCER_BPT_BY_DAY
+        ),
+        ctx.upstream("token_prices_by_day", schema=TOKEN_PRICES_BY_DAY),
     )
 
 

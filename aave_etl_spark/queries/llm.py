@@ -1472,9 +1472,10 @@ def llm_bm25_topk(spark, sf_dir):
     # the tokenize→tf→df→weight corpus pass per call: the stored table IS
     # bm25_postings' output (weights included, 6dp-rounded), so the ranks
     # are value-identical by construction — the bm25-trio store-prefix
-    # sharing the r13 verdict prescribed (guide §5/§6)
+    # sharing the r13 verdict prescribed (guide §5/§6); the (k1, b) the
+    # oracle scores with are checked against the index's params sidecar
     store, tbl, _docs = _bm25_index_store(spark, sf_dir)
-    return text.bm25_topk_from_postings(store.read_bucketed(tbl), k=3)
+    return text.bm25_topk_from_postings(text.bm25_index_postings(store, tbl), k=3)
 
 
 # The sparse-retrieval arm's CTE chain, shared verbatim by the in-flight

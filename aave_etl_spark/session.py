@@ -13,6 +13,10 @@ Design notes (scale-first):
   Spark's dynamic partition overwrite.
 - Arrow enabled — every pandas-UDF boundary (ABI decode, scipy interpolation,
   multimodal decode) transfers via Arrow batches, not pickled rows.
+- Driver heap from the host: ``min(48g, MemTotal/2)`` unless
+  ``SPARK_GRAFT_DRIVER_MEM`` says otherwise. Local mode runs every executor
+  thread in the driver JVM, and a fixed 48g heap let it grow until the OOM
+  killer took it on a 15 GB host.
 """
 
 from __future__ import annotations
@@ -22,6 +26,16 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+
+
+def _default_driver_memory() -> str:
+    """``min(48g, MemTotal/2)``; 48g where ``/proc/meminfo`` is absent."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "48g"
+    return f"{min(48 * 1024, kb // 2048)}m"
 
 
 def get_spark(
@@ -50,7 +64,10 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # Local-mode niceties; harmless on a cluster where they're overridden.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -9,7 +9,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType, TimestampType
 from pyspark.sql.window import Window
+
+#: the warehouse token_prices_by_day table (`token_prices_by_day` output)
+TOKEN_PRICES_BY_DAY = StructType(
+    [
+        StructField("block_day", TimestampType()),
+        StructField("chain", StringType()),
+        StructField("reserve", StringType()),
+        StructField("symbol", StringType()),
+        StructField("usd_price", DoubleType()),
+        StructField("pricing_source", StringType()),
+    ]
+)
 
 
 def token_prices_by_day(

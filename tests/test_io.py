@@ -55,6 +55,22 @@ def test_k3_missing_table_and_pruned_read(spark, tmp_path):
     assert [r.v for r in got.collect()] == [2.0]
 
 
+def test_local_df_zero_column_schema(spark, tmp_path):
+    """A zero-column schema (a missing-table read) builds without a Python
+    RDD and keeps its row count; a row that does not fit its schema
+    raises instead of switching to another conversion path."""
+    from aave_etl_spark.localframe import local_df
+
+    for rows in ([], [(), ()]):
+        df = local_df(spark, rows, StructType([]))
+        assert df.columns == [] and df.count() == len(rows)
+        assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()
+    missing = _store(spark, tmp_path).read("nope")
+    assert missing.columns == [] and missing.count() == 0
+    with pytest.raises(ValueError):
+        local_df(spark, [(1, 2)], "a long")
+
+
 def test_k4_plain_roundtrip_strips_meta(spark, tmp_path):
     store = _store(spark, tmp_path)
     df = spark.createDataFrame([("a", 1.0)], "k string, v double")

@@ -2213,6 +2213,71 @@ def test_pq_topk_sparse_nonzero_ids_and_dim_guard(spark):
         sim.pq_topk(bad, bad.limit(1), k=1, n_subspaces=2, n_codes=2).collect()
 
 
+# ---------------------------------------------------------------------------
+# Empty geometry: no centroids or no codebook means no rows, as a typed
+# empty frame that folds to an empty LocalRelation (no Spark job).
+# ---------------------------------------------------------------------------
+def _pq_vecs(spark, n, dim=4):
+    return spark.createDataFrame(
+        [(i, [float(i + j) for j in range(dim)]) for i in range(n)],
+        "vec_id long, embedding array<double>",
+    )
+
+
+def _assert_typed_empty(out, like):
+    assert out.schema.simpleString() == like.schema.simpleString()
+    assert "LocalTableScan <empty>" in out._jdf.queryExecution().executedPlan().toString()
+    assert out.collect() == []
+
+
+def test_pq_topk_empty_geometry_returns_no_rows(spark):
+    from aave_etl_spark.operators import similarity as sim
+
+    df = _pq_vecs(spark, 6)
+    like = sim.pq_topk(df, df.limit(1), k=2, n_subspaces=2, n_codes=2)
+    # empty corpus: the seeded codebook is empty too
+    empty = df.filter("vec_id < 0")
+    _assert_typed_empty(sim.pq_topk(empty, df, k=2, n_subspaces=2), like)
+    # non-empty corpus, empty trained codebook
+    no_codes = spark.createDataFrame([], "code int, cvec array<double>")
+    _assert_typed_empty(
+        sim.pq_topk(df, df, k=2, n_subspaces=2, codebook=no_codes), like
+    )
+
+
+def test_ivfpq_topk_empty_geometry_returns_no_rows(spark):
+    from aave_etl_spark.operators import similarity as sim
+
+    df = _pq_vecs(spark, 6)
+    like = sim.ivfpq_topk(df, df.limit(1), k=2, n_cells=2, n_subspaces=2, n_codes=2)
+    empty = df.filter("vec_id < 0")
+    _assert_typed_empty(
+        sim.ivfpq_topk(empty, df, k=2, n_cells=2, n_subspaces=2, n_codes=2), like
+    )
+    # fewer than n_cells + 1 candidates: cells seed, the codebook is empty
+    small = df.filter("vec_id < 2")
+    _assert_typed_empty(
+        sim.ivfpq_topk(small, small, k=2, n_cells=2, n_subspaces=2, n_codes=2), like
+    )
+
+
+def test_ivfpq_index_build_empty_geometry_writes_no_codes(spark, tmp_path):
+    """No codebook, no codes: the build writes no code table and stamps no
+    marker (the "incomplete" outcome), and a search names the missing
+    index instead of ranking NULL distances."""
+    from aave_etl_spark.io.table_store import TableStore
+    from aave_etl_spark.operators import similarity as sim
+
+    df = _pq_vecs(spark, 6)
+    for label, corpus in (("empty", df.filter("vec_id < 0")), ("small", df.filter("vec_id < 2"))):
+        store = TableStore(spark, str(tmp_path / label))
+        sim.ivfpq_index_build(store, corpus, n_cells=2, n_codes=2, n_subspaces=2)
+        assert not store.exists("ivfpq_index"), label
+        assert not store.is_complete("ivfpq_index"), label
+        with pytest.raises(ValueError, match="not found"):
+            sim.ivfpq_index_search(store, df, k=2, n_subspaces=2)
+
+
 def test_perplexity_buckets_null_lang_kept_in_both_forms(spark):
     """Review regression: a NULL language (normal classifier outcome) must
     be bucketed by BOTH forms — the approximate path's equi-join used to

@@ -57,6 +57,7 @@ def test_pair_cos_udf_null_contract(spark):
             (1, [1.0, 2.0], [3.0, 4.0]),
             (2, None, [1.0, 1.0]),          # null operand -> NULL
             (3, [1.0, 2.0, 3.0], [1.0, 2.0]),  # length mismatch -> NULL
+            (4, [0.0, 0.0], [1.0, 2.0]),    # zero-norm operand -> NULL
         ],
         "k long, a array<double>, b array<double>",
     )
@@ -64,7 +65,17 @@ def test_pair_cos_udf_null_contract(spark):
         "k", similarity._pair_cos_udf()(F.col("a"), F.col("b")).alias("c")
     ).collect()}
     assert out[1] == pytest.approx(11.0 / ((5.0 ** 0.5) * (25.0 ** 0.5)))
-    assert out[2] is None and out[3] is None
+    assert out[2] is None and out[3] is None and out[4] is None
+    # a zero-norm candidate has no cosine, so it ranks LAST (NULL sorts
+    # last under the desc window), even with the lowest id
+    vecs = _vecs(spark, [
+        (0, [0.0, 0.0]), (1, [1.0, 0.1]), (2, [0.5, 0.5]), (3, [1.0, 0.0]),
+    ])
+    ranked = similarity.cosine_topk(
+        vecs, vecs.filter("vec_id = 3"), k=3
+    ).orderBy("rank").collect()
+    assert [(r.candidate_id, r.rank) for r in ranked] == [(1, 1), (2, 2), (0, 3)]
+    assert ranked[-1].cos_sim is None
 
 
 # ---------------------------------------------------------------------------
@@ -95,7 +106,7 @@ def test_connected_components_batched_equals_unbatched(spark):
 
 # ---------------------------------------------------------------------------
 # _geom_pair: the single-job combined collect parses exactly like the two
-# independent _geom_rows collects, including the empty-side fallback.
+# independent _geom_rows collects, including an empty side.
 # ---------------------------------------------------------------------------
 def test_geom_pair_matches_geom_rows(spark):
     import numpy as np
@@ -111,7 +122,7 @@ def test_geom_pair_matches_geom_rows(spark):
     si, sc = similarity._geom_rows(cb_row)
     assert np.array_equal(gi, ri) and np.array_equal(gc, rc)
     assert np.array_equal(ki, si) and np.array_equal(kc, sc)
-    # empty side -> (None, None) so callers keep the interpreted fallback
+    # empty side -> (None, None): the kernels return no rows for it
     empty = similarity._struct_row(
         cells.filter("cell_id < 0"), "cell_id", "_cells"
     )
@@ -142,6 +153,28 @@ def test_bm25_topk_from_postings_matches_inflight(spark):
         ).collect()
     }
     assert direct == via_postings
+
+
+def test_bm25_index_postings_checks_build_params(spark, tmp_path):
+    """Ranking an at-rest index (the llm_bm25_topk path) checks the
+    (k1, b) its weights were scored under: the build's pair ranks like
+    the in-flight bm25_topk, any other pair raises."""
+    from aave_etl_spark.io.table_store import TableStore
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta beta gamma"), (2, "alpha alpha delta"), (3, "gamma delta")],
+        "doc_id long, text string",
+    )
+    store = TableStore(spark, str(tmp_path / "store"))
+    text.bm25_index_build(store, docs, "idx", k1=1.5, b=0.5)
+    posts = text.bm25_index_postings(store, "idx", k1=1.5, b=0.5)
+    got = {tuple(r) for r in text.bm25_topk_from_postings(posts, k=2).collect()}
+    want = {tuple(r) for r in text.bm25_topk(docs, k=2, k1=1.5, b=0.5).collect()}
+    assert got == want
+    with pytest.raises(ValueError, match="build params"):
+        text.bm25_index_postings(store, "idx")  # default (1.2, 0.75)
+    with pytest.raises(ValueError, match="no params sidecar"):
+        text.bm25_index_postings(store, "never_built")
 
 
 # ---------------------------------------------------------------------------

@@ -274,9 +274,7 @@ def _transports():
     }
 
 
-@pytest.fixture(scope="module")
-def pipeline_store(spark, tmp_path_factory):
-    store = TableStore(spark, str(tmp_path_factory.mktemp("refpipe")))
+def _resources(spark):
     ranks = spark.createDataFrame(
         [("ethereum_v2", "ethereum", 1), ("polygon_v3", "polygon", 2)],
         "market string, chain string, price_rank long",
@@ -346,7 +344,7 @@ def pipeline_store(spark, tmp_path_factory):
          ("ethereum", "0xSTM_E", "stMATIC", 18), ("ethereum", "0xMX_E", "MaticX", 18)],
         "chain string, address string, symbol string, decimals long",
     )
-    resources = {
+    return {
         "transports": _transports(),
         "markets": MARKETS,
         "config_tokens": config_tokens,
@@ -363,6 +361,12 @@ def pipeline_store(spark, tmp_path_factory):
         "balancer_pools": balancer_pools,
         "coingecko_tokens": coingecko_tokens,
     }
+
+
+@pytest.fixture(scope="module")
+def pipeline_store(spark, tmp_path_factory):
+    store = TableStore(spark, str(tmp_path_factory.mktemp("refpipe")))
+    resources = _resources(spark)
     graph = reference_graph(include_market_state=True)
     backfill(
         spark, store, graph, "2024-01-01", "2024-01-02",
@@ -438,6 +442,22 @@ def test_warehouse_layer_full_refresh(pipeline_store):
         "block_day", "chain", "reserve", "symbol", "usd_price", "pricing_source",
     }
     assert tp.filter("pricing_source != 'aave_oracle'").count() == 0
+
+
+def test_warehouse_run_without_chain_day(spark, tmp_path):
+    """The warehouse job reads the chain_day BPT scan with its schema: a
+    run whose chain_day job never wrote ``balancer_bpt_data_by_day``
+    completes, and the warehouse BPT table stays unwritten (empty)."""
+    store = TableStore(spark, str(tmp_path))
+    backfill(
+        spark, store, reference_graph(include_market_state=True),
+        "2024-01-01", "2024-01-01", markets=["ethereum_v2"],
+        resources=_resources(spark),
+        groups=("financials_data_lake", "protocol_data_lake", "warehouse"),
+    )
+    assert not store.exists("balancer_bpt_data_by_day")
+    assert not store.exists("warehouse_balancer_bpt_by_day")
+    assert store.read("token_prices_by_day").count() == 3
 
 
 def test_market_state_spine(pipeline_store):
